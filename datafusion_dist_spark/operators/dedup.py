@@ -29,7 +29,11 @@ from datafusion_dist_spark.functions.hashing import (
     tokens,
     wide_hash_window,
 )
-from datafusion_dist_spark.operators.common import quadratic_pin_guard, spread
+from datafusion_dist_spark.operators.common import (
+    quadratic_pin_guard,
+    session_memo,
+    spread,
+)
 
 # No-arg skew guards (r6). The text-dedup pair ops are the calls a
 # 100 TB user reaches FIRST, and uncapped they are job-killers on any
@@ -77,22 +81,9 @@ PRUNE_MIN_INDEX_FILES = 256
 EST_BANDED_ROW_BYTES = 145
 BUCKET_MIN_INDEX_BYTES = 1 << 30
 DEFAULT_BAND_BUCKETS = 128
-# Per-index-path memo for the read-side auto-select:
-# path -> (freshness_token, (bytes, files)). The FS content summary is
-# one cheap RPC on HDFS but a full recursive listing on local/object-
-# store filesystems, and the continuous-crawl serving loop calls the
-# prebuilt read once per microbatch. Freshness is proven by the root
-# _SUCCESS marker's (mtime, len) — Spark's commit protocol rewrites it
-# on every successful write into the directory FROM ANY PROCESS, so a
-# cross-process append flips the pruned-vs-flat choice on the next
-# read (one stat) instead of waiting for a restart (the r7 staleness
-# gap; same discipline as similarity._PROBE_CACHE). A token of None
-# (no _SUCCESS: non-Spark writer / marker disabled) disables the memo
-# for that path — correctness of the CHOICE degrades to one recursive
-# listing per read, never to a stale answer. Out-of-band changes that
-# do not go through a Spark write job (e.g. hand-padding files) still
-# need an explicit pop, as tests/test_plans.py documents.
-_INDEX_SCALE_CACHE: dict[str, tuple[tuple[int, int], tuple[int, int]]] = {}
+# Memo family and capacity of the read-side (bytes, files) probe.
+_INDEX_SCALE = "dedup.index_scale"
+_INDEX_SCALE_CAPACITY = 8
 # Sentinel distinguishing "not passed" from an explicit None opt-out
 # (minhash's default depends on the dedup mode — see
 # ``minhash_dedup_pairs``).
@@ -595,7 +586,6 @@ def minhash_index_build(
         BAND_STATS_SIDECAR,
         {"p": _sk.HLL_P, "registers": _band_stats_rows(regs)},
     )
-    _INDEX_SCALE_CACHE.pop(path, None)
     return path
 
 
@@ -676,7 +666,6 @@ def minhash_index_append(
                 ),
             },
         )
-    _INDEX_SCALE_CACHE.pop(path, None)
     return path
 
 
@@ -817,6 +806,29 @@ def select_bucket_cap(spark, index_path: str) -> int:
     return int(max(caps)) if caps else DEFAULT_BUCKET_CAP
 
 
+def _index_scale(spark, index_path: str) -> tuple[int, int]:
+    """(bytes, files) under an index directory, memoized behind the
+    root ``_SUCCESS`` marker. The summary is a full recursive listing
+    on local and object-store filesystems, and the continuous-crawl
+    loop reads the index once per microbatch. Spark rewrites the marker
+    on every write job from any process, so an append elsewhere
+    changes the fingerprint; a change made outside a Spark write needs
+    ``common.discard(_INDEX_SCALE, (path,))``."""
+    from datafusion_dist_spark.sources.sidecar import (
+        dir_summary,
+        success_marker_token,
+    )
+
+    return session_memo(
+        spark,
+        _INDEX_SCALE,
+        (index_path,),
+        lambda: dir_summary(spark, index_path),
+        fingerprint=success_marker_token(spark, index_path),
+        capacity=_INDEX_SCALE_CAPACITY,
+    )
+
+
 def minhash_dedup_pairs_prebuilt(
     spark,
     index_path: str,
@@ -908,21 +920,7 @@ def minhash_dedup_pairs_prebuilt(
             "band_buckets='auto' (or an int), or drop prune=True"
         )
     if band_buckets and prune is None:
-        from datafusion_dist_spark.sources.sidecar import (
-            dir_summary,
-            success_marker_token,
-        )
-
-        token = success_marker_token(spark, index_path)
-        hit = _INDEX_SCALE_CACHE.get(index_path)
-        if hit is not None and token is not None and hit[0] == token:
-            nbytes, nfiles = hit[1]
-        else:
-            nbytes, nfiles = dir_summary(spark, index_path)
-            if token is not None:
-                _INDEX_SCALE_CACHE[index_path] = (token, (nbytes, nfiles))
-            else:
-                _INDEX_SCALE_CACHE.pop(index_path, None)
+        nbytes, nfiles = _index_scale(spark, index_path)
         prune = (
             nbytes >= PRUNE_MIN_INDEX_BYTES or nfiles >= PRUNE_MIN_INDEX_FILES
         )

@@ -27,13 +27,19 @@ once (N norms instead of one per pair).
 
 from __future__ import annotations
 
+from urllib.parse import urlparse
+
 import pandas as pd
+from py4j.protocol import Py4JError
+from pyspark.errors import PySparkException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from datafusion_dist_spark.operators.common import (
     QUADRATIC_PIN_MAX_ROWS,
+    file_fingerprint,
     quadratic_pin_guard,
+    session_memo,
     spread,
 )
 
@@ -306,14 +312,15 @@ def _best_centroid(cent_rows, vec_col: str, norm_col: str, dim: int):
     return F.expr(f"array_max(array({entries}))")
 
 
-def _score_rows(V, C, cn, q, qn):
+def _score_rows(V, C, cn):
     """The one numpy implementation of the batched cosine scorer:
-    given a row batch ``V`` (n×dim float64), centroid arrays ``C`` with
-    norms ``cn`` and a query ``q``/``qn``, return (qscore, csims) with
-    the SQL fold's EXACT operation order — shared by the literal
-    scorer (``_numpy_ivf_scorer``) and the dynamic-codebook scorer
-    (``_numpy_dyn_scorer``) so a codebook that arrives as a column is
-    scored bit-identically to one embedded as literals.
+    given a row batch ``V`` (n×dim float64) and centroid arrays ``C``
+    with norms ``cn``, return the n×K cosines with the SQL fold's EXACT
+    operation order — shared by the literal scorer
+    (``_numpy_ivf_scorer``, which scores its query as column 0) and the
+    dynamic-codebook scorer (``_numpy_dyn_scorer``) so a codebook that
+    arrives as a column is scored bit-identically to one embedded as
+    literals.
 
     Order discipline, matching ``_dot_sql``/``_lit_norm``:
     - accumulate over dims left-to-right, starting from the FIRST
@@ -327,18 +334,14 @@ def _score_rows(V, C, cn, q, qn):
     K = len(C)
     v0 = V[:, 0]
     sq = v0 * v0
-    qdot = v0 * q[0]
     dots = [v0 * C[j][0] for j in range(K)]
     for i in range(1, dim):
         vi = V[:, i]
         sq = sq + vi * vi
-        qdot = qdot + vi * q[i]
         for j in range(K):
             dots[j] = dots[j] + vi * C[j][i]
     norm = np.sqrt(sq)
-    qscore = qdot / (norm * qn)
-    csims = np.stack([dots[j] / (norm * cn[j]) for j in range(K)], axis=1)
-    return qscore, csims
+    return np.stack([dots[j] / (norm * cn[j]) for j in range(K)], axis=1)
 
 
 def _numpy_ivf_scorer(cvecs, cnorms, qvec, qnorm):
@@ -361,18 +364,16 @@ def _numpy_ivf_scorer(cvecs, cnorms, qvec, qnorm):
     """
     import numpy as np
 
-    C = [np.asarray(c, dtype=np.float64) for c in cvecs]
-    cn = [float(x) for x in cnorms]
-    q = np.asarray(qvec, dtype=np.float64)
-    qn = float(qnorm)
+    C = [np.asarray(c, dtype=np.float64) for c in [qvec, *cvecs]]
+    cn = [float(x) for x in [qnorm, *cnorms]]
 
     @F.pandas_udf("struct<qscore: double, csims: array<double>>")
     def score(emb: pd.Series) -> pd.DataFrame:
         if len(emb) == 0:
             return pd.DataFrame({"qscore": [], "csims": []})
         V = np.stack(emb.to_numpy()).astype(np.float64)
-        qscore, csims = _score_rows(V, C, cn, q, qn)
-        return pd.DataFrame({"qscore": qscore, "csims": list(csims)})
+        sims = _score_rows(V, C, cn)
+        return pd.DataFrame({"qscore": sims[:, 0], "csims": list(sims[:, 1:])})
 
     return score
 
@@ -405,8 +406,7 @@ def _numpy_dyn_scorer():
             return pd.Series([[]] * len(emb))
         cn = [_lit_norm(e["cvec"]) for e in book]
         V = np.stack(emb.to_numpy()).astype(np.float64)
-        _, csims = _score_rows(V, C, cn, C[0], cn[0])
-        return pd.Series(list(csims))
+        return pd.Series(list(_score_rows(V, C, cn)))
 
     return score
 
@@ -736,6 +736,8 @@ def kmeans_train(
     ``rounds``, the parameterizing codebook, and the returned plan are
     identical to the one-collect-per-round loop.
     """
+    if max_rounds < 1:
+        raise ValueError(f"kmeans_train needs max_rounds >= 1, got {max_rounds}")
     vecs = spread(
         embeddings.select(F.col(id_col), F.col(vec_col))
     ).persist()
@@ -810,61 +812,25 @@ def _probe_rank_key(row):
     return (-row.qsim, row.cid)
 
 
-# Bounded memo for codebook probes: the centroid fetch + query scoring
-# is a tiny Spark job, but it reruns for EVERY query plan built against
-# the same static table (bench passes, repeated user queries) — a
-# production IVF index caches its codebook. Keyed on the session + the
-# embeddings plan's semantic hash (no job to compute) + a file-scan
-# freshness token (#files, max mtime, bytes) + the query, so a changed
-# table, a same-path parquet rewrite, or a new session all miss; see
-# also probe_cache_clear(). FIFO-bounded; guarded like
-# llm._PAIR_CACHE.
-import threading as _threading
-
-_PROBE_CACHE: dict = {}
-_PROBE_CACHE_MAX = 8
-_PROBE_LOCK = _threading.Lock()
-
-
-def probe_cache_clear() -> None:
-    """Drop all memoized probe rankings — the hook for
-    corpus-regeneration flows that rewrite parquet in place."""
-    with _PROBE_LOCK:
-        _PROBE_CACHE.clear()
+# Probe memo capacity (entries per Spark application).
+_PROBE_CAPACITY = 8
 
 
 def _freshness_token(df: DataFrame):
-    """Cheap freshness token for file-scan plans: (#files, max
-    mtime_ns, total bytes) over the scan's input files (no Spark job —
-    ``inputFiles`` reads the FileIndex). Same-path parquet rewrites
-    change mtime/size, so the probe memo MISSES instead of serving
-    stale centroid rows — unlike the repo's other persisted caches,
-    a stale hit here returns wrong data rather than just recomputing.
-    Non-file or unlistable plans → None (memo falls back to the
-    semanticHash-only key, the original static-warehouse trade)."""
+    """Freshness token for a file-scan plan: :func:`file_fingerprint`
+    over the scan's input files (``inputFiles`` reads the FileIndex; no
+    Spark job). On a remote store the sorted file list stands in (paths
+    usually change on rewrite; a stat is not free there). Non-file or
+    unlistable plans → None."""
     try:
         files = df.inputFiles()
-    except Exception:
+    except (Py4JError, PySparkException):
         return None
     if not files:
         return None
-    import os as _os
-    from urllib.parse import unquote as _unquote, urlparse as _urlparse
-
-    max_mtime, total = 0, 0
-    for uri in files:
-        parsed = _urlparse(uri)
-        if parsed.scheme not in ("file", ""):
-            # Remote store: fall back to the file list itself (paths
-            # usually change on rewrite; stat is not free there).
-            return ("paths", len(files), hash(tuple(sorted(files))))
-        try:
-            st = _os.stat(_unquote(parsed.path))
-        except OSError:
-            return None
-        max_mtime = max(max_mtime, st.st_mtime_ns)
-        total += st.st_size
-    return (len(files), max_mtime, total)
+    if any(urlparse(f).scheme not in ("file", "") for f in files):
+        return ("paths", len(files), hash(tuple(sorted(files))))
+    return file_fingerprint(files)
 
 
 def _probe_cids(
@@ -878,50 +844,45 @@ def _probe_cids(
     """(cent_rows, nprobe nearest centroid ids) for one query. The
     query-to-centroid scores are Spark-computed (rounded cosine) so
     the ranking's rounding/tiebreak matches the SQL ORDER BY exactly;
-    the sort key is the shared :func:`_probe_rank_key`."""
-    try:
-        key = (
-            embeddings.sparkSession.sparkContext.applicationId,
+    the sort key is the shared :func:`_probe_rank_key`.
+
+    The centroid fetch is a tiny Spark job, but it would rerun for
+    every plan built against the same static table, so it is memoized
+    per (plan, query, parameters) behind the scan's freshness token,
+    as a production IVF index caches its codebook."""
+
+    def build() -> tuple[list, list[int]]:
+        q = F.lit([float(v) for v in query_vec])
+        cent_rows = (
+            embeddings.filter(F.col(id_col) < n_centroids)
+            .select(
+                F.col(id_col).alias("cid"),
+                F.col(vec_col).alias("cvec"),
+                F.round(cosine(F.col(vec_col), q, None), 6).alias("qsim"),
+            )
+            .collect()
+        )
+        probe_cids = [
+            int(r.cid)
+            for r in sorted(cent_rows, key=_probe_rank_key)[:nprobe]
+        ]
+        return cent_rows, probe_cids
+
+    return session_memo(
+        embeddings.sparkSession,
+        "similarity.probe",
+        (
             embeddings.semanticHash(),
-            _freshness_token(embeddings),
             tuple(float(v) for v in query_vec),
             n_centroids,
             nprobe,
             id_col,
             vec_col,
-        )
-    except Exception:  # semanticHash unavailable (exotic plan): no memo
-        key = None
-    if key is not None:
-        with _PROBE_LOCK:
-            hit = _PROBE_CACHE.get(key)
-        if hit is not None:
-            from datafusion_dist_spark.operators.common import (
-                note_session_cache_hit,
-            )
-
-            note_session_cache_hit()
-            return hit
-    q = F.lit([float(v) for v in query_vec])
-    cent_rows = (
-        embeddings.filter(F.col(id_col) < n_centroids)
-        .select(
-            F.col(id_col).alias("cid"),
-            F.col(vec_col).alias("cvec"),
-            F.round(cosine(F.col(vec_col), q, None), 6).alias("qsim"),
-        )
-        .collect()
+        ),
+        build,
+        fingerprint=_freshness_token(embeddings),
+        capacity=_PROBE_CAPACITY,
     )
-    probe_cids = [
-        int(r.cid)
-        for r in sorted(cent_rows, key=_probe_rank_key)[:nprobe]
-    ]
-    if key is not None:
-        with _PROBE_LOCK:
-            if len(_PROBE_CACHE) >= _PROBE_CACHE_MAX:
-                _PROBE_CACHE.pop(next(iter(_PROBE_CACHE)))
-            _PROBE_CACHE[key] = (cent_rows, probe_cids)
-    return cent_rows, probe_cids
 
 
 def _coarse_probe(

@@ -396,9 +396,6 @@ def kmv_sketch_oracle(
     """
 
 
-_CACHED_KMV_SK: DataFrame | None = None
-
-
 def kmv_intersection_matrix(
     sk: DataFrame, group_col: str, k: int = KMV_K
 ) -> DataFrame:
@@ -458,15 +455,13 @@ def kmv_intersection_matrix(
     sketch built with a SMALLER k is indistinguishable from genuinely
     under-filled (exact) groups and cannot be caught here; pass k
     explicitly wherever the build did."""
-    global _CACHED_KMV_SK
-    from datafusion_dist_spark.operators.common import single_entry_cache
+    from datafusion_dist_spark.operators.common import discard, persist_plan
 
-    sk, _CACHED_KMV_SK = single_entry_cache(sk, _CACHED_KMV_SK)
+    sk = persist_plan("sketch.kmv", sk)
     # One tiny job over the cached sketch serves both guards: the
     # quadratic-in-groups fence and the k-mismatch check. A REJECTED
-    # sketch must not keep the single cache slot (ADVICE r10): without
-    # the unpersist a failed call would pin the bad sketch in executor
-    # memory until a semantically different call evicted it.
+    # sketch is discarded, or it would stay pinned in executor memory
+    # until a semantically different call evicted it (ADVICE r10).
     try:
         probe = sk.agg(
             F.countDistinct(group_col).alias("n_groups"),
@@ -482,11 +477,7 @@ def kmv_intersection_matrix(
             )
         overlap_pair_guard(probe["n_groups"] or 0, "kmv_intersection_matrix")
     except Exception:
-        _CACHED_KMV_SK = None
-        try:
-            sk.unpersist()
-        except Exception:
-            pass
+        discard("sketch.kmv", ())
         raise
     hs = float(KMV_HASH_SPACE)
     stats = sk.groupBy(group_col).agg(

@@ -19,14 +19,8 @@ from pyspark.sql import functions as F
 
 from datafusion_dist_spark.catalog import load_table
 from datafusion_dist_spark.operators import sketch
-from datafusion_dist_spark.operators.common import (
-    single_entry_cache as _single_entry_cache,
-)
+from datafusion_dist_spark.operators.common import persist_plan
 from datafusion_dist_spark.registry import register, register_sql
-
-# Single-entry persist slot for the overlap matrix's distinct-type
-# frame (guard probe + pair frame share one source pass).
-_CACHED_HLL_TYPES: DataFrame | None = None
 
 
 def cents(col: str) -> F.Column:
@@ -810,7 +804,6 @@ def agg_hll_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a type drops out on BOTH engines (the oracle's pair frame is
     # registers-derived — without this filter the Spark side would
     # emit an extra all-zero pair row the oracle omits).
-    global _CACHED_HLL_TYPES
     ev = load_table(spark, sf_dir, "events").select("event_type", "user_id")
     regs = sketch.hll_registers(ev, "user_id", group_cols=("event_type",))
     types = (
@@ -823,7 +816,7 @@ def agg_hll_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     # CACHE, so fence + pair frame share ONE column-pruned source pass
     # (review r10: a limit-above-distinct probe cannot early-stop its
     # map stage — the old probe paid a full extra scan per call).
-    types, _CACHED_HLL_TYPES = _single_entry_cache(types, _CACHED_HLL_TYPES)
+    types = persist_plan("aggregates.hll_types", types)
     sketch.overlap_pair_guard(types.count(), "agg_hll_overlap_matrix")
     ta = types.select(F.col("event_type").alias("type_a"))
     tb = types.select(F.col("event_type").alias("type_b"))

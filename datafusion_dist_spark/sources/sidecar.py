@@ -44,11 +44,8 @@ def success_marker_token(spark, dir_path: str) -> tuple[int, int] | None:
     directory — builds and appends alike, from any process. None when
     the marker is absent (committer configured with
     ``mapreduce.fileoutputcommitter.marksuccessfuljobs=false``, or a
-    non-Spark writer): callers must treat None as "cannot prove
-    freshness" and skip caching. The index scale cache keys on this so
-    a cross-process append flips the pruned-vs-flat auto-select
-    without a restart (stat is one RPC vs the recursive listing of
-    ``dir_summary``)."""
+    non-Spark writer): freshness cannot be proven. One stat, where
+    ``dir_summary`` is a recursive listing."""
     fs, p = _fs_and_path(spark, dir_path, "_SUCCESS")
     if not fs.exists(p):
         return None

@@ -10,6 +10,13 @@ from datafusion_dist_spark.operators import dedup, joins, similarity
 from tests.conftest import SF_DIR
 
 
+def _memo_keys(family: str) -> list[tuple]:
+    """Keys (application id stripped) held in one session-memo family."""
+    from datafusion_dist_spark.operators import common
+
+    return [slot[1:] for slot in common._MEMO.get(family, {})]
+
+
 def test_salted_join_equals_plain_join(spark):
     li = load_table(spark, SF_DIR, "lineitem").select("l_orderkey", "l_quantity")
     o = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_custkey")
@@ -399,6 +406,14 @@ def test_kmeans_train_stops_at_fixed_point(spark):
         assert got[(1, dim)] == (10.0, 5)
 
 
+def test_kmeans_train_rejects_zero_rounds(spark):
+    """max_rounds=0 used to return rounds=0 although one round ran (the
+    sequential loop reported 1); a round budget below 1 is refused."""
+    df = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="max_rounds >= 1"):
+        similarity.kmeans_train(df, n_centroids=1, max_rounds=0)
+
+
 def test_kmeans_fused_rounds_bit_identical(spark):
     """The r12 batched trainer (two Lloyd rounds per collect, round B
     chained in-plan through the dynamic-codebook scorer) must be
@@ -738,6 +753,108 @@ def test_ngram_truth_cache_matches_direct_derivation(spark):
     again = llm._ngram_truth_shared(spark, SF_DIR)
     assert session_cache_hits() == h0 + 1
     assert again is shared
+
+
+@pytest.mark.parametrize(
+    "family",
+    [
+        "query_vec",
+        "dup_offset",
+        "minhash_pairs",
+        "ngram_truth",
+        "probe",
+        "index_scale",
+        "single_entry",
+    ],
+)
+def test_session_memo_warm_lookup_is_one_hit(spark, tmp_path, family):
+    """Every session-memo family reports a warm lookup the same way:
+    a second identical lookup returns the very same object and raises
+    the hit counter behind the bench's ``warm`` flag by exactly one."""
+    from datafusion_dist_spark.operators import common
+    from datafusion_dist_spark.queries import llm
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    q = llm._query_vec(spark, SF_DIR)
+    written = str(tmp_path / "written")
+    if family == "index_scale":
+        emb.limit(5).write.parquet(written)  # a Spark write leaves _SUCCESS
+    lookup = {
+        "query_vec": lambda: llm._query_vec(spark, SF_DIR),
+        "dup_offset": lambda: llm._dup_offset(spark, SF_DIR),
+        "minhash_pairs": lambda: llm._minhash_pairs_shared(spark, SF_DIR),
+        "ngram_truth": lambda: llm._ngram_truth_shared(spark, SF_DIR),
+        "probe": lambda: similarity._probe_cids(
+            emb, q, 8, 2, "vec_id", "embedding"
+        ),
+        "index_scale": lambda: dedup._index_scale(spark, written),
+        "single_entry": lambda: common.persist_plan(
+            "test.single_entry", emb.select("vec_id")
+        ),
+    }[family]
+    first = lookup()
+    h0 = common.session_cache_hits()
+    again = lookup()
+    assert common.session_cache_hits() == h0 + 1
+    assert again is first
+    common.discard("test.single_entry", ())
+
+
+def test_session_memos_follow_rewritten_parquet(spark, tmp_path):
+    """The memos derived from an sf_dir's parquet are keyed on the
+    files' fingerprint, not on the directory name: rewriting
+    documents.parquet and embeddings.parquet in place, within one
+    session, must make the query vector, the planted-id offset and the
+    persisted minhash pair set all come from the new data."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from datafusion_dist_spark.queries import llm
+
+    d = str(tmp_path / "sf")
+    os.makedirs(d)
+
+    def write(ids, first_vec):
+        pq.write_table(
+            pa.table(
+                {
+                    "doc_id": pa.array(ids, pa.int64()),
+                    "text": [
+                        f"w{i} x{i} y{i} z{i} q{i} r{i} s{i}" for i in ids
+                    ],
+                }
+            ),
+            os.path.join(d, "documents.parquet"),
+        )
+        pq.write_table(
+            pa.table(
+                {
+                    "vec_id": pa.array([0, 1], pa.int64()),
+                    "embedding": pa.array(
+                        [first_vec, [0.5, 0.5]], pa.list_(pa.float32())
+                    ),
+                }
+            ),
+            os.path.join(d, "embeddings.parquet"),
+        )
+
+    def pairs():
+        return {
+            (r.a_id, r.b_id)
+            for r in llm._minhash_pairs_shared(spark, d).collect()
+        }
+
+    write(list(range(10)), [1.0, 0.0])
+    assert llm._dup_offset(spark, d) == 100_000
+    assert llm._query_vec(spark, d) == [1.0, 0.0]
+    assert pairs() == {(0, 100_000), (5, 100_005)}
+
+    write(list(range(200_000, 200_010)), [0.0, 1.0])
+    assert llm._dup_offset(spark, d) == 300_000
+    assert llm._query_vec(spark, d) == [0.0, 1.0]
+    assert pairs() == {(200_000, 500_000), (200_005, 500_005)}
 
 
 def test_embedding_health_report_degenerate_rows_match_oracle(spark, tmp_path):
@@ -1287,12 +1404,14 @@ def test_index_scale_cache_cross_process_append(spark, tmp_path, monkeypatch):
     # Threshold between the pre- and post-append file counts so the
     # append itself is what flips the decision.
     monkeypatch.setattr(dd, "PRUNE_MIN_INDEX_FILES", files_before + 1)
-    dd._INDEX_SCALE_CACHE.pop(path, None)
+    from datafusion_dist_spark.operators import common
+
+    common.discard(dd._INDEX_SCALE, (path,))
     before = dd.minhash_dedup_pairs_prebuilt(
         spark, path, batch, split_id=500000
     )
     assert not prunes(before), "small index must serve the flat scan"
-    assert path in dd._INDEX_SCALE_CACHE, "probe result must be memoized"
+    assert (path,) in _memo_keys(dd._INDEX_SCALE), "probe result must be memoized"
 
     script = textwrap.dedent(
         f"""
@@ -1322,7 +1441,7 @@ def test_index_scale_cache_cross_process_append(spark, tmp_path, monkeypatch):
     )
     assert prunes(after), (
         "cross-process append did not flip the auto-select to the "
-        "pruned read — stale _INDEX_SCALE_CACHE entry"
+        "pruned read — stale index-scale memo entry"
     )
 
 
@@ -1377,7 +1496,7 @@ def test_ivf_index_file_discipline(spark, tmp_path):
 
 
 def test_probe_cache_misses_on_same_path_rewrite(spark, tmp_path):
-    """_PROBE_CACHE must not serve stale centroid rankings after the
+    """The probe memo must not serve stale centroid rankings after the
     parquet under the SAME path is rewritten: the freshness token
     (#files, max mtime, bytes) folds file state into the cache key.
     Unlike the repo's other persisted caches, a stale hit here returns
@@ -1385,7 +1504,6 @@ def test_probe_cache_misses_on_same_path_rewrite(spark, tmp_path):
     from datafusion_dist_spark.operators.similarity import (
         _freshness_token,
         _probe_cids,
-        probe_cache_clear,
     )
 
     path = str(tmp_path / "emb-rewrite")
@@ -1413,7 +1531,6 @@ def test_probe_cache_misses_on_same_path_rewrite(spark, tmp_path):
     sims2 = {(int(r.cid), float(r.qsim)) for r in cents2}
     assert sims1 != sims2, "stale centroid rows served after rewrite"
     assert len(cents2) == 8 and len(probes2) == 2
-    probe_cache_clear()
 
 
 def test_minhash_bucket_cap_bounds_hot_cluster(spark):
@@ -2044,8 +2161,8 @@ def test_overlap_pair_guard_fences_many_groups(spark):
     with pytest.raises(ValueError, match="quadratic"):
         sketch.kmv_intersection_matrix(sk, "grp")
     # ADVICE r10: a REJECTED sketch must not keep the single-entry
-    # cache slot — the guard-raise path unpersists and resets it.
-    assert sketch._CACHED_KMV_SK is None
+    # cache slot — the guard-raise path unpersists and discards it.
+    assert not _memo_keys("sketch.kmv")
     assert not sk.storageLevel.useMemory
 
 
@@ -2064,7 +2181,7 @@ def test_kmv_matrix_rejects_mismatched_k(spark):
     with pytest.raises(ValueError, match="built with a larger k"):
         sketch.kmv_intersection_matrix(sk_big, "grp")  # k=64
     # the rejected sketch must not occupy the cache slot (ADVICE r10)
-    assert sketch._CACHED_KMV_SK is None
+    assert not _memo_keys("sketch.kmv")
     assert not sk_big.storageLevel.useMemory
 
 

@@ -651,10 +651,12 @@ def test_minhash_bucketed_index_scan_is_partition_pruned(spark, tmp_path):
     # _SUCCESS marker's freshness token. Hand-touched pad files do NOT
     # go through a Spark write job, so the token is unchanged and the
     # memo would serve the stale summary — explicit invalidation, as
-    # documented on the cache. (A real cross-process APPEND rewrites
-    # _SUCCESS and flips the choice without this — pinned by
+    # documented on dedup._index_scale. (A real cross-process APPEND
+    # rewrites _SUCCESS and flips the choice without this — pinned by
     # test_operators.py::test_index_scale_cache_cross_process_append.)
-    dd._INDEX_SCALE_CACHE.pop(path, None)
+    from datafusion_dist_spark.operators.common import discard
+
+    discard(dd._INDEX_SCALE, (path,))
     auto_big = dd.minhash_dedup_pairs_prebuilt(
         spark, path, batch, split_id=500000, threshold=0.5
     )

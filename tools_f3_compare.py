@@ -27,11 +27,16 @@ coverage (the per-run canaries in the record let a reader audit that)
 from __future__ import annotations
 
 import json
+import math
 import sys
 
 
 def _load(paths: list[str]) -> dict[str, dict]:
+    """Per query: every run of every file, plus ``jobs`` and ``facts``
+    from the file that holds the query's min-wall run (the run the
+    record reports)."""
     out: dict[str, dict] = {}
+    best: dict[str, float] = {}
     for path in paths:
         for line in open(path):
             line = line.strip()
@@ -46,9 +51,22 @@ def _load(paths: list[str]) -> dict[str, dict]:
                 {"wall": r["wall"], "canary": r["canary"]}
                 for r in row["runs"]
             )
-            e["jobs"] = row.get("jobs_last_run")
-            e["facts"] = row.get("facts")
+            wall = min(r["wall"] for r in row["runs"])
+            if q not in best or wall < best[q]:
+                best[q] = wall
+                e["jobs"] = row.get("jobs_last_run")
+                e["facts"] = row.get("facts")
     return out
+
+
+def _geomean(ratios: list[float | None]) -> tuple[float | None, str | None]:
+    """(geomean of the now/prev ratios, None), or (None, reason) when
+    it is undefined."""
+    if not ratios:
+        return None, "the two sides share no queries"
+    if None in ratios:
+        return None, "a zero wall leaves a ratio undefined"
+    return round(math.exp(sum(math.log(r) for r in ratios) / len(ratios)), 3), None
 
 
 def main() -> None:
@@ -80,21 +98,19 @@ def main() -> None:
         p, n = prev[q], now[q]
         wp = min(r["wall"] for r in p["runs"])
         wn = min(r["wall"] for r in n["runs"])
-        ratio = round(wn / wp, 3)
-        ratios.append(wn / wp)
+        ratio = wn / wp if wp > 0 and wn > 0 else None
+        ratios.append(ratio)
         queries[q] = {
             "prev_wall": wp,
             "now_wall": wn,
-            "ratio": ratio,
+            "ratio": None if ratio is None else round(ratio, 3),
             "prev_jobs": p["jobs"],
             "now_jobs": n["jobs"],
             "prev_runs": p["runs"],
             "now_runs": n["runs"],
             "now_facts": n["facts"],
         }
-    import math
-
-    geo = math.exp(sum(math.log(r) for r in ratios) / len(ratios))
+    geo, why = _geomean(ratios)
     record = {
         "metric": "f3_per_query_compare",
         "corpus": "/tmp/ddspark-scale/f3 (bench_scale.py deterministic x3 corpus)",
@@ -107,7 +123,8 @@ def main() -> None:
         "n_queries": len(queries),
         "total_prev": round(sum(v["prev_wall"] for v in queries.values()), 3),
         "total_now": round(sum(v["now_wall"] for v in queries.values()), 3),
-        "geomean_ratio": round(geo, 3),
+        "geomean_ratio": geo,
+        "geomean_undefined_because": why,
         "queries": queries,
     }
     with open(out_path, "w") as f:
@@ -116,7 +133,7 @@ def main() -> None:
     print(
         f"wrote {out_path}: {len(queries)} queries, "
         f"{record['total_prev']} -> {record['total_now']} s, "
-        f"geomean ratio {record['geomean_ratio']}"
+        f"geomean ratio {geo if why is None else why}"
     )
 
 
