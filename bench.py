@@ -15,12 +15,20 @@ Regression-gate mode (exit 1 on drift, stdout JSON line unchanged):
 Fails when any query common to both runs exceeds budget-factor x its
 reference time — but only when sf AND the data hashes match; a changed
 corpus is reported as incomparable instead of failing the gate.
+
+The module is also the one measurement library the rehearsal scripts
+(bench_*.py, tools_*.py) import: the noop sink (``run_query``), the
+min-of-N timer (``time_runs``), the loadavg+canary fields
+(``host_record``), the JSON-line-plus-``--out`` writer (``emit``), the
+scaled-corpus directory (``scale_dir``) and the newest-round artifact
+lookup (``latest_artifact``).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 
@@ -30,6 +38,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from datafusion_dist_spark import registry
+from datafusion_dist_spark.catalog import DEFAULT_SF_DIR, data_hashes
 from datafusion_dist_spark.session import build_session
 
 HEADLINE = [
@@ -136,9 +145,68 @@ HEADLINE = [
 ]
 
 
+REPO = os.path.dirname(os.path.abspath(__file__))
+
+
 def run_query(df) -> None:
     # noop datasource: full execution, zero sink cost, nothing collected.
     df.write.mode("overwrite").format("noop").save()
+
+
+def time_runs(fn, runs: int) -> list[float]:
+    """Wall seconds of ``runs`` back-to-back calls of ``fn()``; callers
+    keep the min (this host shows transient co-tenant spikes that
+    inflate single runs 2-6x, so the min is the steady-state cost)."""
+    if runs < 1:
+        raise ValueError(f"runs must be >= 1, got {runs}")
+    walls = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        fn()
+        walls.append(time.perf_counter() - t0)
+    return walls
+
+
+def scale_dir(factor: int, skew: str | None = None, *, env: bool = True) -> str:
+    """Directory of the factor-x rehearsal corpus: $SPARK_GRAFT_SCALE_DIR
+    when set (and ``env``), else the cached /tmp/ddspark-scale/f<factor>
+    (suffixed -<skew> for a skewed corpus)."""
+    default = f"/tmp/ddspark-scale/f{factor}" + (f"-{skew}" if skew else "")
+    return os.environ.get("SPARK_GRAFT_SCALE_DIR", default) if env else default
+
+
+def latest_artifact(prefix: str, directory: str = REPO) -> str | None:
+    """File name of the newest ``<prefix>_rNN.json`` in ``directory``
+    by round number, or None. The match is exact, so
+    ``BENCH_SCALE`` never picks up ``BENCH_SCALE_SKEW_rNN.json``."""
+    pat = re.compile(rf"{re.escape(prefix)}_r(\d+)\.json")
+    rounds = {
+        int(m.group(1)): name
+        for name in os.listdir(directory)
+        if (m := pat.fullmatch(name))
+    }
+    return rounds[max(rounds)] if rounds else None
+
+
+def host_record() -> dict:
+    """The host-noise fields every rehearsal artifact carries: the
+    1/5/15-min loadavg and the ``host_canary`` throughput probes, so
+    cross-round wall drift can be divided by the canary ratio before
+    it is read as a code change."""
+    return {
+        "loadavg": [round(v, 2) for v in os.getloadavg()],
+        "canary": host_canary(),
+    }
+
+
+def emit(record: dict, out_path: str | None) -> None:
+    """Print ``record`` as one JSON line and, given ``--out``, write the
+    same line to that file (the committable artifact)."""
+    line = json.dumps(record)
+    print(line)
+    if out_path:
+        with open(out_path, "w") as fh:
+            fh.write(line + "\n")
 
 
 def warmup(spark, sf_dir: str) -> None:
@@ -154,18 +222,14 @@ def warmup(spark, sf_dir: str) -> None:
     load_table(spark, sf_dir, "region").count()  # parquet reader path
     par = spark.sparkContext.defaultParallelism
     tiny = spark.range(par * 4).repartition(par)
-    tiny.mapInPandas(lambda it: it, tiny.schema).write.mode("overwrite").format(
-        "noop"
-    ).save()
+    run_query(tiny.mapInPandas(lambda it: it, tiny.schema))
     # Scalar pandas_udf runs through a different eval path
     # (ArrowEvalPython) with its own first-use serializer setup.
     @F.pandas_udf("double")
     def _warm(v: pd.Series) -> pd.Series:
         return v * 1.0
 
-    tiny.select(_warm(F.col("id").cast("double"))).write.mode(
-        "overwrite"
-    ).format("noop").save()
+    run_query(tiny.select(_warm(F.col("id").cast("double"))))
 
 
 def host_canary() -> dict[str, float]:
@@ -217,28 +281,6 @@ def canary_ratio(result: dict, base: dict) -> float | None:
     for r in ratios:
         prod *= r
     return prod ** (1.0 / len(ratios))
-
-
-def data_hashes(sf_dir: str) -> dict[str, str]:
-    """md5 of every *.parquet in sf_dir — the corpus fingerprint that
-    makes cross-round timing comparisons honest (the testdata is
-    regenerated between rounds; same-name files are not same-bytes)."""
-    import hashlib
-
-    out: dict[str, str] = {}
-    try:
-        names = sorted(os.listdir(sf_dir))
-    except OSError:
-        return out
-    for fname in names:
-        if not fname.endswith(".parquet"):
-            continue
-        h = hashlib.md5()
-        with open(os.path.join(sf_dir, fname), "rb") as fh:
-            for chunk in iter(lambda: fh.read(1 << 20), b""):
-                h.update(chunk)
-        out[fname[: -len(".parquet")]] = h.hexdigest()
-    return out
 
 
 def assert_budget(
@@ -345,8 +387,6 @@ def compact_line(result: dict, limit: int = 1950) -> str:
 
 
 def main() -> None:
-    from datafusion_dist_spark.catalog import DEFAULT_SF_DIR
-
     argv = sys.argv[1:]
     budget_path: str | None = None
     budget_factor = 2.0
@@ -366,9 +406,7 @@ def main() -> None:
         else:
             raise SystemExit(f"unknown argument {a!r}")
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
-    import re
-
+    sf_dir = DEFAULT_SF_DIR
     m = re.search(r"sf([0-9.]+)/?$", sf_dir)
     sf = m.group(1) if m else "0"  # unknown layout: report 0, don't crash
     spark = build_session("ddspark-bench")
@@ -388,12 +426,11 @@ def main() -> None:
     canary = host_canary()
     for name in HEADLINE:
         fn = specs[name].spark_fn
-        runs: list[float] = []
         hits0 = session_cache_hits()
-        for _ in range(3):
-            t0 = time.perf_counter()
-            run_query(fn(spark, sf_dir))
-            runs.append(round(time.perf_counter() - t0, 3))
+        runs = [
+            round(t, 3)
+            for t in time_runs(lambda: run_query(fn(spark, sf_dir)), 3)
+        ]
         # A query is "warm" when any of its passes was served in part
         # by a cross-query session cache (the minhash / ngram-truth
         # pair sets, the graph/sketch single-entry caches, the IVF
@@ -432,10 +469,7 @@ def main() -> None:
         "canary": canary,
     }
     # Full record first (humans, and the committed BENCH_SELF copy)...
-    print(json.dumps(result))
-    if out_path is not None:
-        with open(out_path, "w") as fh:
-            fh.write(json.dumps(result) + "\n")
+    emit(result, out_path)
     # ...then a compact line LAST, sized to survive the driver's
     # 2000-char stdout tail-capture (BENCH_rNN kept parsing as null for
     # three rounds because the single full line is ~2.5 KB and its head

@@ -59,9 +59,11 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+import bench
+from datafusion_dist_spark.catalog import DEFAULT_SF_DIR
 
 # The heavy tier: every bench_scale entry whose x10 wall is >= ~1.5 s
 # (cheap entries are scheduling-bound and carry no parallelism signal).
@@ -198,20 +200,14 @@ def child(cores_n: int, sf_dir: str, runs: int, names: list[str]) -> None:
     from datafusion_dist_spark import registry
     from datafusion_dist_spark.session import build_session
 
-    import bench
-
     spark = build_session(f"ddspark-bench-cores-{cores_n}")
     bench.warmup(spark, sf_dir)
     specs = registry.all_specs()
     out: dict[str, float] = {}
     for name in names:
         fn = specs[name].spark_fn
-        t = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            t = min(t, time.perf_counter() - t0)
-        out[name] = round(t, 3)
+        walls = bench.time_runs(lambda: bench.run_query(fn(spark, sf_dir)), runs)
+        out[name] = round(min(walls), 3)
     spark.stop()
     print("CORES_RESULT " + json.dumps(out))
 
@@ -274,16 +270,14 @@ def main() -> None:
     if child_n is not None and child_n > 0:
         child(
             child_n,
-            sf_dir or "/root/testdata/sf0.1",
+            sf_dir or DEFAULT_SF_DIR,
             runs,
             names_arg.split(",") if names_arg else list(HEAVY),
         )
         return
 
-    base_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    scale_dir = os.environ.get(
-        "SPARK_GRAFT_SCALE_DIR", f"/tmp/ddspark-scale/f{factor}"
-    )
+    base_dir = DEFAULT_SF_DIR
+    scale_dir = bench.scale_dir(factor)
     from datafusion_dist_spark.scale import scale_corpus
 
     scale_corpus(base_dir, scale_dir, factor)
@@ -296,7 +290,7 @@ def main() -> None:
     dirs: dict[int, str] = {factor: scale_dir}
     for f in by_factor:
         if f != factor:
-            dirs[f] = f"/tmp/ddspark-scale/f{f}"
+            dirs[f] = bench.scale_dir(f, env=False)
             scale_corpus(base_dir, dirs[f], f)
 
     # Split bytes PER corpus dir: sizing once from the full-factor
@@ -410,13 +404,10 @@ def main() -> None:
             f"  speedup x{speedup}{flag}",
             file=sys.stderr,
         )
-    import bench  # host canary: cross-round drift normalization
-
     result = {
         "metric": "strong_scaling",
         "factor": factor,
-        "loadavg": [round(v, 2) for v in os.getloadavg()],
-        "canary": bench.host_canary(),
+        **bench.host_record(),
         "cores": list(cores),
         "runs_per_query": runs,
         "scan_split_bytes": mpb,
@@ -433,11 +424,7 @@ def main() -> None:
         "queries": queries,
         "violations": violations,
     }
-    line = json.dumps(result)
-    print(line)
-    if out_path:
-        with open(out_path, "w") as fh:
-            fh.write(line + "\n")
+    bench.emit(result, out_path)
     if violations and do_assert:
         print("strong-scaling gate FAILED", file=sys.stderr)
         raise SystemExit(1)

@@ -20,10 +20,11 @@ single-host analog with deliberately tight memory.
 Pass/fail contract: every entry must COMPLETE (a spill is fine and
 invisible here except as wall time; an OOM/executor-lost fails the
 entry) and finish within ``--mult`` x its local[32] wall at the same
-x10 corpus, read from a reference artifact (default
-BENCH_SCALE_r06.json (or the skew artifact with --skew), `scaled_sec` rows) — the stated budget for "8
-bounded cores vs 32 unbounded cores plus cluster overhead". Entries
-without a reference row get the absolute ``--cap`` seconds.
+x10 corpus, read from a reference artifact's `scaled_sec` rows
+(default: the newest BENCH_SCALE_rNN.json, or BENCH_SCALE_SKEW_rNN.json
+with --skew) — the stated budget for "8 bounded cores vs 32 unbounded
+cores plus cluster overhead". Entries without a reference row get the
+absolute ``--cap`` seconds.
 
 ``--skew zipf`` (r6) composes the two failure axes the r5 artifacts
 only measured separately: the zipfian corpus (hot keys, template
@@ -55,6 +56,8 @@ import time
 
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
+
+import bench
 
 MASTER = "local-cluster[2,4,4096]"
 DEFAULT_MULT = 8.0  # vs local[32] scaled_sec: 4x fewer cores + overhead
@@ -105,19 +108,18 @@ def main() -> None:
         else:
             raise SystemExit(f"unknown argument {a!r}")
     if ref_path is None:
-        ref_path = (
-            "BENCH_SCALE_SKEW_r11.json" if skew else "BENCH_SCALE_r11.json"
+        ref_path = bench.latest_artifact(
+            "BENCH_SCALE_SKEW" if skew else "BENCH_SCALE"
         )
 
     from bench_scale import SCALE_QUERIES, SKEW_QUERIES
     from datafusion_dist_spark import registry
+    from datafusion_dist_spark.catalog import DEFAULT_SF_DIR
     from datafusion_dist_spark.scale import scale_corpus
+    from datafusion_dist_spark.session import build_session
 
-    base_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    suffix = f"-{skew}" if skew else ""
-    scale_dir = os.environ.get(
-        "SPARK_GRAFT_SCALE_DIR", f"/tmp/ddspark-scale/f{factor}{suffix}"
-    )
+    base_dir = DEFAULT_SF_DIR
+    scale_dir = bench.scale_dir(factor, skew)
     print(
         f"scaling corpus {base_dir} -> {scale_dir} (x{factor}"
         f"{', skew=' + skew if skew else ''})",
@@ -127,6 +129,8 @@ def main() -> None:
 
     ref: dict[str, float] = {}
     try:
+        if ref_path is None:
+            raise FileNotFoundError("no committed reference artifact")
         with open(os.path.join(REPO, ref_path)) as fh:
             for name, row in json.load(fh)["queries"].items():
                 if "scaled_sec" in row:
@@ -135,19 +139,15 @@ def main() -> None:
         print(f"no reference artifact at {ref_path}; absolute caps only",
               file=sys.stderr)
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(MASTER)
-        .appName("ddspark-bench-memory")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "3g")
-        .config("spark.executorEnv.PYTHONPATH", REPO)
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
+    spark = build_session(
+        "ddspark-bench-memory",
+        master=MASTER,
+        shuffle_partitions=32,
+        extra_conf={
+            "spark.driver.memory": "3g",
+            "spark.executorEnv.PYTHONPATH": REPO,
+        },
     )
-    spark.sparkContext.setLogLevel("WARN")
 
     tier = SKEW_QUERIES if skew else SCALE_QUERIES
     names = [
@@ -166,9 +166,7 @@ def main() -> None:
         t0 = time.perf_counter()
         err = None
         try:
-            specs[name].spark_fn(spark, scale_dir).write.mode(
-                "overwrite"
-            ).format("noop").save()
+            bench.run_query(specs[name].spark_fn(spark, scale_dir))
         except Exception as exc:  # OOM / executor lost / task failure
             err = f"{type(exc).__name__}: {str(exc)[:300]}"
         sec = round(time.perf_counter() - t0, 3)
@@ -204,13 +202,10 @@ def main() -> None:
                 "partition inside the bounded-memory cluster"
             )
     spark.stop()
-    import bench  # host canary: cross-round drift normalization
-
     out = {
         "metric": "memory_rehearsal" + (f"_{skew}" if skew else ""),
         "master": MASTER,
-        "loadavg": [round(v, 2) for v in os.getloadavg()],
-        "canary": bench.host_canary(),
+        **bench.host_record(),
         "factor": factor,
         "skew": skew,
         **({"aqe_skew_join": aqe_probe} if aqe_probe is not None else {}),
@@ -221,11 +216,7 @@ def main() -> None:
         "skipped": SKIP,
         "violations": violations,
     }
-    line = json.dumps(out)
-    print(line)
-    if out_path:
-        with open(out_path, "w") as fh:
-            fh.write(line + "\n")
+    bench.emit(out, out_path)
     if violations and do_assert:
         print("memory rehearsal FAILED:\n  " + "\n  ".join(violations),
               file=sys.stderr)

@@ -36,14 +36,15 @@ so a reader can see what was not measured.
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+import bench
 from datafusion_dist_spark import registry
+from datafusion_dist_spark.catalog import DEFAULT_SF_DIR
 from datafusion_dist_spark.scale import scale_corpus
 from datafusion_dist_spark.session import build_session
 
@@ -295,10 +296,6 @@ EXCLUDED: dict[str, str] = {
 DEFAULT_BUDGET_PER_FACTOR = 1.2  # 12x at factor 10
 
 
-def run_query(df) -> None:
-    df.write.mode("overwrite").format("noop").save()
-
-
 def measure_ivf_prebuilt(
     spark, base_dir: str, scale_dir: str, factor: int, runs: int
 ) -> dict[str, dict]:
@@ -333,18 +330,19 @@ def measure_ivf_prebuilt(
             os.path.dirname(scale_dir) or "/tmp/ddspark-scale",
             f"ivf-index-{tag}",
         )
-        tb = tq = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            similarity.ivf_index_build(emb, n_centroids=k_centroids, path=path)
-            tb = min(tb, time.perf_counter() - t0)
+        tb = min(bench.time_runs(
+            lambda: similarity.ivf_index_build(
+                emb, n_centroids=k_centroids, path=path
+            ),
+            runs,
+        ))
         qs = emb.filter(F.col("vec_id") % 40 == 0)
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            run_query(
+        tq = min(bench.time_runs(
+            lambda: bench.run_query(
                 similarity.ivf_knn_join_prebuilt(spark, path, qs, k=5, nprobe=2)
-            )
-            tq = min(tq, time.perf_counter() - t0)
+            ),
+            runs,
+        ))
         phases[tag] = (tb, tq)
     out: dict[str, dict] = {}
     for phase, idx in (("build", 0), ("query", 1)):
@@ -436,11 +434,8 @@ def main() -> None:
         else:
             raise SystemExit(f"unknown argument {a!r}")
 
-    base_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    suffix = f"-{skew}" if skew else ""
-    scale_dir = os.environ.get(
-        "SPARK_GRAFT_SCALE_DIR", f"/tmp/ddspark-scale/f{factor}{suffix}"
-    )
+    base_dir = DEFAULT_SF_DIR
+    scale_dir = bench.scale_dir(factor, skew)
     print(
         f"scaling corpus {base_dir} -> {scale_dir} (x{factor}"
         f"{', skew=' + skew if skew else ''})",
@@ -449,8 +444,6 @@ def main() -> None:
     t0 = time.perf_counter()
     manifest = scale_corpus(base_dir, scale_dir, factor, skew=skew)
     print(f"corpus ready in {time.perf_counter() - t0:.1f}s", file=sys.stderr)
-
-    import bench  # warmup + data_hashes
 
     spark = build_session("ddspark-bench-scale")
     bench.warmup(spark, base_dir)
@@ -466,15 +459,10 @@ def main() -> None:
         fn = specs[name].spark_fn
         power, coeff = budgets[name] or (1.0, DEFAULT_BUDGET_PER_FACTOR)
         budget = coeff * factor**power
-        tb = ts = float("inf")
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            run_query(fn(spark, base_dir))
-            tb = min(tb, time.perf_counter() - t0)
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            run_query(fn(spark, scale_dir))
-            ts = min(ts, time.perf_counter() - t0)
+        tb, ts = (
+            min(bench.time_runs(lambda: bench.run_query(fn(spark, d)), runs))
+            for d in (base_dir, scale_dir)
+        )
         ratio = round(ts / tb, 2) if tb > 0 else float("inf")
         ok = ratio <= budget
         results[name] = {
@@ -533,17 +521,9 @@ def main() -> None:
         "excluded": EXCLUDED,
         "violations": violations,
         "base_data_hashes": manifest["source"],
-        # Host throughput probes (bench.host_canary): divide cross-round
-        # wall drift by the canary ratio before reading it as a code
-        # change — VERDICT r8 task 3.
-        "loadavg": [round(v, 2) for v in os.getloadavg()],
-        "canary": bench.host_canary(),
+        **bench.host_record(),
     }
-    line = json.dumps(out)
-    print(line)
-    if out_path:
-        with open(out_path, "w") as fh:
-            fh.write(line + "\n")
+    bench.emit(out, out_path)
     if violations and do_assert:
         print("scale budget FAILED:\n  " + "\n  ".join(violations), file=sys.stderr)
         raise SystemExit(1)

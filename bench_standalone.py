@@ -35,7 +35,8 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+import bench
+from datafusion_dist_spark.catalog import DEFAULT_SF_DIR as SF_DIR
 
 # Heavy-ish slice across the engine's plan shapes: scan+agg, shuffle
 # join, banded-LSH dedup (python workers + shuffle), clustered
@@ -54,7 +55,7 @@ VIOLATION_RATIO = 1.5
 MIN_WALL = 2.0  # below this, walls are scheduling noise on both shapes
 
 _CHILD = r"""
-import json, os, sys, time
+import json, os, sys
 sys.path.insert(0, os.environ["DDSPARK_REPO"])
 import bench
 from datafusion_dist_spark import registry
@@ -72,11 +73,7 @@ bench.warmup(spark, sf_dir)
 walls = {}
 for name in os.environ["DDSPARK_ENTRIES"].split(","):
     fn = specs[name].spark_fn
-    best = float("inf")
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        bench.run_query(fn(spark, sf_dir))
-        best = min(best, time.perf_counter() - t0)
+    best = min(bench.time_runs(lambda: bench.run_query(fn(spark, sf_dir)), runs))
     walls[name] = round(best, 3)
     print(f"  {name}: {walls[name]}s", file=sys.stderr, flush=True)
 print("CHILD_WALLS " + json.dumps(walls))
@@ -152,17 +149,9 @@ def main() -> None:
         "min_wall_gate_sec": MIN_WALL,
         "violations": violations,
         "wall_total_sec": round(time.time() - t0, 1),
-        "loadavg": [round(v, 2) for v in os.getloadavg()],
-        # Host throughput probes (bench.host_canary): divide cross-round
-        # wall drift by the canary ratio before reading it as a code
-        # change — VERDICT r8 task 3.
-        "canary": __import__("bench").host_canary(),
+        **bench.host_record(),
     }
-    line = json.dumps(result)
-    print(line)
-    if args.out:
-        with open(args.out, "w") as fh:
-            fh.write(line + "\n")
+    bench.emit(result, args.out)
     if violations:
         print("standalone parity gate FAILED", file=sys.stderr)
         raise SystemExit(1)

@@ -38,6 +38,30 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def data_hashes(sf_dir: str) -> dict[str, str]:
+    """md5 of every *.parquet in sf_dir, keyed by table name ({} when
+    the directory is missing) — the corpus fingerprint that makes
+    cross-round timing comparisons honest (the testdata is regenerated
+    between rounds; same-name files are not same-bytes) and that keys
+    the scaled-corpus manifest."""
+    import hashlib
+
+    out: dict[str, str] = {}
+    try:
+        names = sorted(os.listdir(sf_dir))
+    except OSError:
+        return out
+    for fname in names:
+        if not fname.endswith(".parquet"):
+            continue
+        h = hashlib.md5()
+        with open(os.path.join(sf_dir, fname), "rb") as fh:
+            for chunk in iter(lambda: fh.read(1 << 20), b""):
+                h.update(chunk)
+        out[fname[: -len(".parquet")]] = h.hexdigest()
+    return out
+
+
 def pin_session_confs(spark: SparkSession) -> None:
     """Pin the runtime confs determinism depends on, idempotently.
 
@@ -46,7 +70,7 @@ def pin_session_confs(spark: SparkSession) -> None:
     appended to excludedRules) — in a shared session that changes
     timestamp semantics for the host's own queries too. It is the
     deliberate contract of every public entry point below
-    (``load_table`` / ``load_tables`` / ``register_views``): the
+    (``load_table`` / ``register_views``): the
     engine's oracle parity hard-requires these settings, and a
     save/restore scope would silently un-pin them for the lazily
     evaluated DataFrames we return (confs are read at execution, not
@@ -131,12 +155,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type != "timestamp":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
 
 
 def register_views(

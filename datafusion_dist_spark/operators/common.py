@@ -358,19 +358,6 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     # exchange-bearing plans pass through unprobed.
     plan = df._jdf.queryExecution().executedPlan().toString()
     if _EXCHANGE_RE.search(plan):
-        import os as _os
-
-        if _os.environ.get("SPARK_GRAFT_SPREAD_AUDIT") and not re.search(
-            r"(?<!Broadcast)Exchange\b", plan
-        ):
-            import sys as _sys
-            import traceback as _tb
-
-            print(
-                "SPREAD_AUDIT broadcast-only passthrough:\n"
-                + "".join(_tb.format_stack(limit=8)),
-                file=_sys.stderr,
-            )
         return df
     if df.rdd.getNumPartitions() >= n:
         return df

@@ -235,28 +235,6 @@ def _banded(signatures: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
     ).select("doc_id", "sig", "band.band_id", "band.band_key")
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame, bands: int = 4, rows_per_band: int = 4
-) -> DataFrame:
-    """LSH banding: docs sharing any band of the signature become a
-    candidate pair (a_id < b_id). Equi-join on (band_id, band_key),
-    hinted SHUFFLE_HASH so both sides' identical exchanges collapse to
-    one signature computation (ReuseExchange) — see
-    minhash_dedup_pairs."""
-    banded = _banded(signatures, bands, rows_per_band)
-    a, b = banded.alias("a").hint("shuffle_hash"), banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .distinct()
-    )
-
-
 def minhash_dedup_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -1350,13 +1328,4 @@ def duplicate_clusters(
     raise RuntimeError(
         f"duplicate_clusters did not converge in {max_iters} rounds; "
         "raise max_iters (component diameter exceeds 2^max_iters)"
-    )
-
-
-def cluster_summary(clusters: DataFrame) -> DataFrame:
-    """Per-cluster size + canonical keep id (== cluster_id, the min)."""
-    return (
-        clusters.groupBy("cluster_id")
-        .agg(F.count("*").alias("n_members"))
-        .withColumn("keep_id", F.col("cluster_id"))
     )

@@ -344,9 +344,11 @@ def _score_rows(V, C, cn):
     return np.stack([dots[j] / (norm * cn[j]) for j in range(K)], axis=1)
 
 
-def _numpy_ivf_scorer(cvecs, cnorms, qvec, qnorm):
-    """Arrow-batched scorer: per row, the raw query cosine and the raw
-    cosine to each of K centroids, computed by numpy with the SQL
+def _numpy_ivf_scorer(cvecs, cnorms, qvec=None, qnorm=None):
+    """Arrow-batched scorer: per row, the raw cosine to each of K
+    centroids (``csims``) and, given a query, the raw query cosine
+    (``qscore``; assignment-only callers pass none and skip that
+    column's fold), computed by numpy with the SQL
     fold's EXACT operation order — so every double is bit-identical to
     the unrolled ``_dot_sql`` expression (property-tested,
     tests/test_properties.py::test_numpy_scorer_matches_sql_fold).
@@ -364,16 +366,30 @@ def _numpy_ivf_scorer(cvecs, cnorms, qvec, qnorm):
     """
     import numpy as np
 
-    C = [np.asarray(c, dtype=np.float64) for c in [qvec, *cvecs]]
-    cn = [float(x) for x in [qnorm, *cnorms]]
+    C = [np.asarray(c, dtype=np.float64) for c in cvecs]
+    cn = [float(x) for x in cnorms]
+    # _score_rows folds each column independently, so leaving the query
+    # out keeps every centroid cosine bit-identical.
+    q = int(qvec is not None)
+    if q:
+        C.insert(0, np.asarray(qvec, dtype=np.float64))
+        cn.insert(0, float(qnorm))
+    cols = ["qscore", "csims"] if q else ["csims"]
 
-    @F.pandas_udf("struct<qscore: double, csims: array<double>>")
+    @F.pandas_udf(
+        "struct<qscore: double, csims: array<double>>"
+        if q
+        else "struct<csims: array<double>>"
+    )
     def score(emb: pd.Series) -> pd.DataFrame:
         if len(emb) == 0:
-            return pd.DataFrame({"qscore": [], "csims": []})
+            return pd.DataFrame({c: [] for c in cols})
         V = np.stack(emb.to_numpy()).astype(np.float64)
         sims = _score_rows(V, C, cn)
-        return pd.DataFrame({"qscore": sims[:, 0], "csims": list(sims[:, 1:])})
+        out = pd.DataFrame({"csims": list(sims[:, q:])})
+        if q:
+            out.insert(0, "qscore", sims[:, 0])
+        return out
 
     return score
 
@@ -484,12 +500,7 @@ def kmeans_refine_step(
             F.lit(0).cast("bigint").alias("n_members"),
         )
     cvecs = [[float(v) for v in r.cvec] for r in cent_rows]
-    scorer = _numpy_ivf_scorer(
-        cvecs,
-        [_lit_norm(c) for c in cvecs],
-        cvecs[0],  # qscore unused; reuse the shared scorer as-is
-        _lit_norm(cvecs[0]),
-    )
+    scorer = _numpy_ivf_scorer(cvecs, [_lit_norm(c) for c in cvecs])
     # spread(): the r5 strong-scaling gate measured this entry FLAT at
     # 8 vs 32 cores (x1.0, 3.1 s) — the x10 corpus parquet arrives as
     # 1-2 input splits and the scorer + posexplode + partial aggregate
@@ -1287,12 +1298,7 @@ def semantic_dedup_decisions(
             F.lit(0).cast("bigint").alias("n_dups"),
         )
     cvecs = [[float(v) for v in r.cvec] for r in cent_rows]
-    scorer = _numpy_ivf_scorer(
-        cvecs,
-        [_lit_norm(c) for c in cvecs],
-        cvecs[0],  # qscore unused; reuse the shared scorer as-is
-        _lit_norm(cvecs[0]),
-    )
+    scorer = _numpy_ivf_scorer(cvecs, [_lit_norm(c) for c in cvecs])
     a = (
         spread(embeddings)
         .select(id_col, vec_col, scorer(F.col(vec_col)).alias("s"))
@@ -1731,15 +1737,14 @@ def ivf_knn_join(
     # Corpus assignment via the Arrow-batched numpy scorer + in-plan
     # rounded argmax — ivf_topk's route: no K×dim unrolled expression,
     # so no cold Janino spike and milliseconds of planning instead of
-    # a monster expression tree per call. The query-score half of the
-    # scorer is unused here (dummy query = centroid 0). spread():
-    # a compact parquet corpus arrives as 1-2 input splits, which
+    # a monster expression tree per call (no query: csims only).
+    # spread(): a compact parquet corpus arrives as 1-2 input splits, which
     # would pin the scorer + candidate join to 2 cores (measured flat
     # 8->32-core speedup in BENCH_CORES before the fix).
     from types import SimpleNamespace
 
     cent_rows = [SimpleNamespace(cid=c) for c in cids]
-    scorer = _numpy_ivf_scorer(cvecs, cnorms, cvecs[0], cnorms[0])
+    scorer = _numpy_ivf_scorer(cvecs, cnorms)
     scored0 = spread(corpus).select(
         F.col(id_col).alias("c_id"),
         F.col(vec_col).alias("c_vec"),
@@ -1899,7 +1904,7 @@ def ivf_index_build(
     cnorms = [_lit_norm(v) for v in cvecs]
     dim = len(cvecs[0])
     cent_rows = [SimpleNamespace(cid=c) for c in cids]
-    scorer = _numpy_ivf_scorer(cvecs, cnorms, cvecs[0], cnorms[0])
+    scorer = _numpy_ivf_scorer(cvecs, cnorms)
     scored0 = spread(corpus).select(
         F.col(id_col).alias("c_id"),
         F.col(vec_col).alias("c_vec"),

@@ -91,19 +91,6 @@ TABLES = [
 ]
 
 
-def _file_hashes(src_dir: str) -> dict[str, str]:
-    out: dict[str, str] = {}
-    for fname in sorted(os.listdir(src_dir)):
-        if not fname.endswith(".parquet"):
-            continue
-        h = hashlib.md5()
-        with open(os.path.join(src_dir, fname), "rb") as fh:
-            for chunk in iter(lambda: fh.read(1 << 20), b""):
-                h.update(chunk)
-        out[fname[: -len(".parquet")]] = h.hexdigest()
-    return out
-
-
 def _char_rotation(k: int) -> dict[int, int]:
     """str.translate table for replica k: rotate a-z / A-Z by k mod 26
     and 0-9 by k mod 10; everything else (spaces, punctuation)
@@ -430,6 +417,8 @@ def scale_corpus(
     Returns the manifest."""
     import pyarrow.parquet as pq
 
+    from datafusion_dist_spark.catalog import data_hashes
+
     if factor > 130:
         raise ValueError(
             "factor > 130 exceeds the character-rotation period "
@@ -444,7 +433,7 @@ def scale_corpus(
     manifest = {
         "factor": factor,
         "tables": tables,
-        "source": _file_hashes(src_dir),
+        "source": data_hashes(src_dir),
         "replica_version": _REPLICA_VERSION,
     }
     if skew is not None:

@@ -20,6 +20,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from datafusion_dist_spark import registry
+from datafusion_dist_spark.catalog import DEFAULT_SF_DIR
 from datafusion_dist_spark.plans import formatted_plan
 from datafusion_dist_spark.session import build_session
 
@@ -33,7 +34,7 @@ def main() -> None:
 
         names = list(bench.HEADLINE)
     os.makedirs(out_dir, exist_ok=True)
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = DEFAULT_SF_DIR
     spark = build_session("ddspark-plans")
     specs = registry.all_specs()
     for name in names:

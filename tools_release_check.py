@@ -21,8 +21,9 @@ Also fails when the working tree has UNCOMMITTED changes to measured
 source: artifacts regenerated on a dirty tree cannot be tied to any
 commit at all.
 
-Driver-written artifacts (CORRECTNESS_rNN.json / BENCH_rNN.json) land
-AFTER the round's final commit by construction and are skipped.
+Driver-written artifacts (CORRECTNESS_rNN.json / BENCH_rNN.json /
+PERF_rNN.json / VERIFY_rNN.json) land AFTER the round's final commit by
+construction and are skipped.
 
 Usage:
   python tools_release_check.py --round 11       # exit 1 on violations
@@ -58,7 +59,7 @@ MEASURED_SOURCE = [
 
 # Artifacts written by the external driver after the final commit —
 # exempt from the freeze rule by construction.
-DRIVER_WRITTEN = re.compile(r"^(CORRECTNESS|BENCH)_r\d+\.json$")
+DRIVER_WRITTEN = re.compile(r"^(CORRECTNESS|BENCH|PERF|VERIFY)_r\d+\.json$")
 
 
 def _git(*args: str) -> str:

@@ -1,7 +1,8 @@
 """Two-point scaling-exponent analysis over bench_scale artifacts.
 
-Reads two BENCH_SCALE JSONs at different factors (default: the
-committed factor-3 and factor-10 round artifacts) and prints, per
+Reads two BENCH_SCALE JSONs at different factors (default: the newest
+committed BENCH_SCALE_F3_rNN.json and BENCH_SCALE_rNN.json, the
+factor-3 and factor-10 round artifacts) and prints, per
 query, the fitted power-law exponent
 
     p = log(ratio_hi / ratio_lo) / log(factor_hi / factor_lo)
@@ -21,15 +22,22 @@ factor-10 ratio cannot.
 """
 import json
 import math
+import os
 import sys
+
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+import bench
 
 
 def main() -> None:
-    lo_path, hi_path = (
-        sys.argv[1:3]
-        if len(sys.argv) >= 3
-        else ("BENCH_SCALE_F3_r11.json", "BENCH_SCALE_r11.json")
-    )
+    if len(sys.argv) >= 3:
+        lo_path, hi_path = sys.argv[1:3]
+    else:
+        names = [bench.latest_artifact(f"BENCH_SCALE{t}") for t in ("_F3", "")]
+        if None in names:
+            raise SystemExit("no committed BENCH_SCALE_F3 / BENCH_SCALE pair")
+        lo_path, hi_path = (os.path.join(bench.REPO, n) for n in names)
     lo, hi = json.load(open(lo_path)), json.load(open(hi_path))
     flo, fhi = lo["factor"], hi["factor"]
     if flo >= fhi:
